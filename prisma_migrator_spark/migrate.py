@@ -25,7 +25,9 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from prisma_migrator_spark.catalog import list_tables, read_parquet
 from prisma_migrator_spark.writers.upsert import append_skip_duplicates
@@ -58,6 +60,19 @@ class MigrationReport:
         return "\n".join(lines)
 
 
+def _observed_rows(read: Observation, df: DataFrame) -> int:
+    """Source rows ``read`` counted during the action that just ran.
+    AQE drops a finished stage whose output is empty from the final
+    plan, observed metrics included — on the dedup paths when every
+    keyed row is a duplicate or the source table is empty — and the
+    observation then holds no row; only then is the source counted
+    again."""
+    try:
+        return read.get["n"]
+    except Py4JJavaError:
+        return df.count()
+
+
 def migrate_table(
     spark: SparkSession,
     src_dir: str,
@@ -71,8 +86,10 @@ def migrate_table(
     try:
         src_path = os.path.join(src_dir, f"{table}.parquet")
         dst_path = os.path.join(dst_dir, f"{table}.parquet")
-        df = read_parquet(spark, src_path)
-        n_read = df.count()
+        # rows_read rides the plan that moves the rows (the write, or
+        # the dedup path's count) instead of a second source scan
+        read = Observation()
+        df = read_parquet(spark, src_path).observe(read, F.count(F.lit(1)).alias("n"))
         keys = (key_cols or {}).get(table)
         if os.path.exists(dst_path):
             existing = read_parquet(spark, dst_path)
@@ -82,11 +99,12 @@ def migrate_table(
                 else df.exceptAll(existing)
             )
             n_new = fresh.count()
+            n_read = _observed_rows(read, df)
             if n_new:
                 fresh.write.mode("append").parquet(dst_path)
         else:
             df.write.mode("overwrite").parquet(dst_path)
-            n_new = n_read
+            n_read = n_new = _observed_rows(read, df)
         return TableResult(table, "copied", n_read, n_new, time.time() - t0)
     except Exception as exc:  # per-table isolation, migrate.ts:49-52
         return TableResult(table, "failed", seconds=time.time() - t0, error=str(exc))

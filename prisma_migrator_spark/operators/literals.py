@@ -21,14 +21,22 @@ Empty input falls back to ``F.array()`` — the same Column the old
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def _d(v: float) -> str:
     """Exact SQL double literal (repr round-trips; parser is
-    correctly rounded — identical bits)."""
-    return f"{float(v)!r}D"
+    correctly rounded — identical bits). ±inf and NaN have no literal
+    syntax (``infD`` fails to parse), so they are cast from the
+    string spellings Spark's cast accepts ('inf', '-inf', 'nan'),
+    which constant-fold to the same values ``F.lit`` carries."""
+    v = float(v)
+    if math.isfinite(v):
+        return f"{v!r}D"
+    return f"CAST('{v!r}' AS DOUBLE)"
 
 
 def _s(v: str) -> str:

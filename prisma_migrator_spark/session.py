@@ -2,8 +2,9 @@
 
 Local-mode testing uses ``local[$SPARK_GRAFT_CPUS]``; the same configs
 (AQE, shuffle partitions sized to the cluster, UTC session time zone,
-Arrow for the Pandas-UDF slow path) are the ones we would set on a real
-multi-executor cluster. Nothing here is local-mode-only except the
+Arrow for the Pandas-UDF slow path, a codegen cache that holds the
+working set) are the ones we would set on a real multi-executor
+cluster. Nothing here is local-mode-only except the
 master URL.
 """
 
@@ -28,6 +29,13 @@ def get_spark(
       the excess anyway).
     - UTC session timezone so timestamp semantics match the DuckDB
       oracle and are cluster-invariant.
+    - codegen cache sized to the engine's working set: a warm pass
+      recompiles every generated class Spark's default 100-entry
+      cache evicted (measured per pass at local[4]: ``etl`` 218
+      classes, ``headline`` 229-241, the whole query registry
+      3,437), so 4096 entries — headroom because Guava splits the
+      cache into 4 LRU segments — keep a long-lived session's
+      repeated queries compiled once.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = str(shuffle_partitions or os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
@@ -46,6 +54,7 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
         )
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # UI off by default (driver/bench hygiene); tools that read
         # per-stage spill/shuffle metrics over the REST API (e.g.

@@ -243,3 +243,28 @@ def test_bloom_never_false_negative(keys, probes, fpp):
     # probes make no false-negative claim — just must not crash
     for p in probes:
         _contains(bits, m, k, *_key_hashes(p))
+
+
+DOC_TEXT = st.one_of(
+    st.none(),
+    st.sampled_from(["", " ", "  \t "]),
+    st.lists(st.sampled_from(["aa", "bb", "Cc", "dd"]), min_size=1, max_size=5).map(
+        " ".join
+    ),
+)
+
+
+@given(texts=st.lists(DOC_TEXT, min_size=1, max_size=8))
+@_SETTINGS
+def test_simhash_row_local_matches_agg_on_null_and_empty_text(spark, texts):
+    """The row-local simhash drops NULL-text documents exactly as the
+    explode+groupBy reference (simhash_agg) does, and signs empty and
+    whitespace-only text identically."""
+    from prisma_migrator_spark.llm.dedup import simhash, simhash_agg
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id int, text string")
+    for n_bits in (16, 64):
+        got = {r.doc_id: r.simhash for r in simhash(df, n_bits=n_bits).collect()}
+        exp = {r.doc_id: r.simhash for r in simhash_agg(df, n_bits=n_bits).collect()}
+        assert got == exp
+        assert set(got) == {i for i, t in enumerate(texts) if t is not None}

@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from prisma_migrator_spark.migrate import migrate
+from prisma_migrator_spark.catalog import read_parquet
+from prisma_migrator_spark.migrate import migrate, migrate_table
 from prisma_migrator_spark.writers.upsert import (
     append_skip_duplicates,
     upsert_parquet,
@@ -1032,3 +1033,58 @@ def test_read_arrow_shards_missing_column_fails_fast(spark, tmp_path):
     rows, bad = read_arrow_shards(spark, path, "doc_id bigint, nope string")
     with pytest.raises(Exception, match="schema/config"):
         rows.count()
+
+
+def _jobs_in_group(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_migrate_rows_read_observed_without_extra_scan(spark, sf_dir, tmp_path):
+    """rows_read comes from an Observation on the plan that moves the
+    rows, not from a separate count() job: it still equals the source
+    row count on the copy path and on both dedup paths (keyed
+    anti-join, keyless exceptAll), and copying a table launches only
+    the write's jobs."""
+    dst = str(tmp_path / "dst")
+    os.makedirs(dst)
+    src = os.path.join(sf_dir, "nation.parquet")
+    n_src = spark.read.parquet(src).count()
+    keys = {"nation": ["n_nationkey"]}
+
+    copied = []
+    copy_jobs = _jobs_in_group(
+        spark, "migrate-copy",
+        lambda: copied.append(migrate_table(spark, sf_dir, dst, "nation")),
+    )
+    assert copied[0].status == "copied"
+    assert copied[0].rows_read == copied[0].rows_written == n_src
+
+    # the copy costs exactly the write's jobs; the count it no longer
+    # runs was at least one more (two under AQE: scan stage + final)
+    df = read_parquet(spark, src)
+    write_jobs = _jobs_in_group(
+        spark, "plain-write",
+        lambda: df.write.mode("overwrite").parquet(str(tmp_path / "old")),
+    )
+    count_jobs = _jobs_in_group(spark, "plain-count", df.count)
+    assert copy_jobs == write_jobs and count_jobs >= 1
+
+    for key_cols in (keys, None):  # anti-join path, exceptAll path
+        res = migrate_table(spark, sf_dir, dst, "nation", key_cols)
+        assert res.status == "copied", res.error
+        assert (res.rows_read, res.rows_written) == (n_src, 0)
+
+    # a partial destination: both dedup paths write the missing rows
+    for i, key_cols in enumerate((keys, None)):
+        part = str(tmp_path / f"part{i}")
+        df.where("n_nationkey < 10").write.parquet(
+            os.path.join(part, "nation.parquet")
+        )
+        res = migrate_table(spark, sf_dir, part, "nation", key_cols)
+        assert (res.rows_read, res.rows_written) == (n_src, n_src - 10)
