@@ -224,10 +224,3 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: list[str] | None = None
 ) -> dict[str, DataFrame]:
     return {t: load_table(spark, sf_dir, t) for t in (names or TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    """Register each table as a temp view so ``spark.sql`` works over
-    the same names the DuckDB oracle sees."""
-    for name, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(name)

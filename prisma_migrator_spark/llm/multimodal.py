@@ -2,9 +2,15 @@
 
 Pattern for image/audio/video at 100 TB: the payload is an opaque
 ``binary`` column (or a reference to object storage), metadata is a
-typed struct, and decode/feature-extraction runs as Arrow-batched
-Pandas UDFs via ``mapInPandas`` — Python touches each batch once,
-everything else stays columnar.
+typed struct, and decode/feature-extraction runs Arrow-batched via
+``mapInPandas`` — Python touches each batch once, everything else
+stays columnar. Every per-payload decode stage here has ONE shape,
+:func:`~prisma_migrator_spark.functions.arrow.map_decode`: a per-row
+function plus an output schema over ``(doc_id, payload)``, where an
+undecodable payload becomes a NULL row for its id (the fingerprint
+stages then drop those rows). Payload synthesis has one shape too,
+:func:`_synthesis_stage`. Only :func:`sample_frames`, which fans one
+payload out to several frame rows, writes its own batch loop.
 
 Five modalities run FULLY REAL bytes end-to-end, stdlib-only:
 WAV/RIFF audio (synthesis + chunk-walk parse + RMS), 24-bit BMP
@@ -24,23 +30,46 @@ per-format decoders; there is no ``fake=True`` stand-in left.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from prisma_migrator_spark.functions.arrow import map_decode
+
 FEATURE_SCHEMA = "doc_id bigint, n_bytes int, features array<double>"
 
 
-def attach_binary_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def _synthesis_stage(df: DataFrame, make: Callable[..., bytes]) -> DataFrame:
+    """The one payload-synthesis stage: ``make(doc_id, *rest)`` ->
+    payload bytes for each row of ``df`` (``doc_id`` first, then the
+    columns the caller selected), run inside Arrow batches
+    (``mapInPandas``) — byte synthesis is Python-side work, exactly
+    where a real pipeline's download/transcode step sits. Output
+    ``(doc_id bigint, payload binary)``."""
+    import pandas as pd
+
+    def run(batches):
+        for pdf in batches:
+            ids = pdf["doc_id"].astype("int64")
+            rest = (pdf[c] for c in pdf.columns[1:])
+            yield pd.DataFrame(
+                {
+                    "doc_id": ids,
+                    "payload": [make(int(i), *r) for i, *r in zip(ids, *rest)],
+                }
+            )
+
+    return df.mapInPandas(run, "doc_id bigint, payload binary")
+
+
+def attach_binary_payload(df: DataFrame) -> DataFrame:
     """Simulate a multimodal table: payload = utf-8 bytes of the text,
     metadata struct alongside. With real media this is the raw file
     content + probed container metadata."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.select(
-        id_col,
+        "doc_id",
         payload.alias("payload"),
         F.struct(
             F.lit("text/plain").alias("mime"),
@@ -90,44 +119,29 @@ def resize_images(
     height: int = 64,
 ) -> DataFrame:
     """Arrow-batched REAL image resize over the binary payload
-    (``mapInPandas``): decode any supported format (BMP/PNG/JPEG),
+    (:func:`map_decode`): decode any supported format (BMP/PNG/JPEG),
     nearest-neighbor resample, re-emit as 24-bit BMP — the thumbnail
     stage of an image pipeline, format-normalizing on the way out.
     Undecodable payloads yield a NULL-payload row (fault isolation),
     never a task failure."""
-    import pandas as pd
 
-    schema = "doc_id bigint, payload binary, width int, height int"
+    def resize(p: bytes) -> tuple[bytes]:
+        src_w, src_h, rows = image_pixels(p)
+        return (
+            rows_to_bmp(
+                [
+                    [rows[oy * src_h // height][ox * src_w // width] for ox in range(width)]
+                    for oy in range(height)
+                ]
+            ),
+        )
 
-    def _resize_one(p: bytes) -> bytes | None:
-        try:
-            src_w, src_h, rows = image_pixels(bytes(p))
-        except Exception:
-            return None
-        pad = (-(width * 3)) % 4
-        out_rows = []
-        for oy in range(height - 1, -1, -1):  # BMP is bottom-up
-            sy = oy * src_h // height
-            line = bytearray()
-            for ox in range(width):
-                r, g, b = rows[sy][ox * src_w // width]
-                line += bytes((b, g, r))
-            line += b"\x00" * pad
-            out_rows.append(bytes(line))
-        return bmp_wrap(b"".join(out_rows), width, height)
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": pdf["payload"].map(_resize_one),
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(run, schema)
+    return map_decode(df, resize, "doc_id bigint, payload binary").select(
+        "doc_id",
+        "payload",
+        F.lit(width).alias("width"),
+        F.lit(height).alias("height"),
+    )
 
 
 def extract_features(
@@ -135,32 +149,39 @@ def extract_features(
     n_bins: int = 8,
 ) -> DataFrame:
     """Arrow-batched REAL feature extraction over the binary payload
-    (``mapInPandas``): the scale-path shape for any decode step.
+    (:func:`map_decode`): the scale-path shape for any decode step.
     Batches stream through Python; nothing driver-side. Non-image
-    payloads yield NULL features (fault isolation)."""
-    import pandas as pd
+    payloads yield NULL features but keep their real ``n_bytes``; a
+    NULL payload yields a NULL row (fault isolation)."""
 
-    def _feat(p: bytes) -> list[float] | None:
+    def features(p: bytes) -> tuple:
         try:
-            return decode_image(bytes(p), n_bins=n_bins)
+            return len(p), decode_image(p, n_bins=n_bins)
         except Exception:
-            return None
+            return len(p), None
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": pdf["payload"].map(len).astype("int32"),
-                    "features": pdf["payload"].map(_feat),
-                }
-            )
-            yield out
-
-    return df.select("doc_id", "payload").mapInPandas(run, FEATURE_SCHEMA)
+    return map_decode(df, features, FEATURE_SCHEMA)
 
 
 # --- WAV/RIFF audio: a FULLY REAL modality (stdlib-only) --------------
+
+
+def pcm16_wav(rate: int, samples: list[int]) -> bytes:
+    """Wrap mono 16-bit PCM samples in a minimal RIFF/WAVE container
+    (the encode counterpart of the `parse_wav_metadata` walk)."""
+    import struct
+
+    frames = struct.pack(f"<{len(samples)}h", *samples)
+    return (
+        b"RIFF"
+        + struct.pack("<I", 36 + len(frames))
+        + b"WAVE"
+        + b"fmt "
+        + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
+        + b"data"
+        + struct.pack("<I", len(frames))
+        + frames
+    )
 
 
 def synthesize_wav(
@@ -173,52 +194,23 @@ def synthesize_wav(
     point: WAV is the modality this container CAN do end-to-end."""
     import hashlib
     import math
-    import struct
 
     h = int(hashlib.md5(seed_text.encode()).hexdigest()[:8], 16)
     freq = 100 + (h % 900)
-    amp = 12000
-    frames = b"".join(
-        struct.pack(
-            "<h",
-            int(amp * math.sin(2 * math.pi * freq * i / sample_rate)),
-        )
-        for i in range(n_samples)
+    return pcm16_wav(
+        sample_rate,
+        [
+            int(12000 * math.sin(2 * math.pi * freq * i / sample_rate))
+            for i in range(n_samples)
+        ],
     )
-    byte_rate = sample_rate * 2
-    hdr = (
-        b"RIFF"
-        + struct.pack("<I", 36 + len(frames))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, sample_rate, byte_rate, 2, 16)
-        + b"data"
-        + struct.pack("<I", len(frames))
-    )
-    return hdr + frames
 
 
-def attach_wav_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def attach_wav_payload(df: DataFrame) -> DataFrame:
     """Audio variant of `attach_binary_payload`: a real WAV per row
-    (Arrow-batched Pandas UDF — byte synthesis is Python-side work,
-    exactly where a real pipeline's download/transcode step sits)."""
-    import pandas as pd
-
-    # modern type-hinted UDF form via functions/arrow.py — the
-    # deprecated PandasUDFType enum is gone repo-wide (ADVICE r7)
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_wav(ids, texts):
-        return pd.Series(
-            [synthesize_wav(int(i), t or "") for i, t in zip(ids, texts)]
-        )
-
-    make_wav = scalar_pandas_udf("binary", _make_wav)
-
-    return df.select(
-        id_col, make_wav(F.col(id_col), F.col(text_col)).alias("payload")
+    (:func:`_synthesis_stage`)."""
+    return _synthesis_stage(
+        df.select("doc_id", "text"), lambda i, t: synthesize_wav(i, t or "")
     )
 
 
@@ -228,13 +220,56 @@ WAV_META_SCHEMA = (
 )
 
 
-def parse_wav_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL decode: a RIFF chunk WALK (iterate (id, size) pairs to
-    locate ``fmt `` and ``data`` — word-aligned skips, so spec-valid
-    extras like LIST/INFO or ``fact`` chunks between them are handled,
-    and WAVE_FORMAT_EXTENSIBLE is unwrapped to its PCM subformat),
-    then RMS loudness from the 16-bit PCM frames — no external codec,
-    ``struct`` + stdlib math. Runs as ``mapInPandas`` so each Arrow
+def _wav_pcm16(b: bytes) -> tuple[int, int, tuple[int, ...]]:
+    """The RIFF chunk WALK: iterate (id, size) pairs to locate ``fmt ``
+    and ``data`` — word-aligned skips, so spec-valid extras like
+    LIST/INFO or ``fact`` chunks between them are handled, and
+    WAVE_FORMAT_EXTENSIBLE is unwrapped to its PCM subformat. Returns
+    ``(rate, n_channels, interleaved samples)``; raises ``ValueError``
+    on anything that is not integer PCM16, and on a truncated payload
+    whose declared ``fmt ``/``data`` size overruns the blob — never
+    plausible-but-wrong stats over a partial frame slice."""
+    import struct
+
+    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
+        raise ValueError("not a RIFF/WAVE payload")
+    fmt_body = data_body = None
+    off = 12
+    while off + 8 <= len(b):
+        cid = b[off : off + 4]
+        (sz,) = struct.unpack("<I", b[off + 4 : off + 8])
+        body = b[off + 8 : off + 8 + sz]
+        if cid in (b"fmt ", b"data") and len(body) < sz:
+            raise ValueError("truncated WAV chunk")
+        if cid == b"fmt ":
+            fmt_body = body
+        elif cid == b"data":
+            data_body = body
+        off += 8 + sz + (sz & 1)  # RIFF chunks are word-aligned
+    if fmt_body is None or data_body is None or len(fmt_body) < 16:
+        raise ValueError("missing fmt/data chunk")
+    tag, n_ch, rate, _br, _al, bits = struct.unpack("<HHIIHH", fmt_body[:16])
+    if tag == 0xFFFE and len(fmt_body) >= 26:  # EXTENSIBLE: real
+        (tag,) = struct.unpack("<H", fmt_body[24:26])  # tag in GUID
+    if tag != 1 or bits != 16 or n_ch == 0 or rate == 0:
+        raise ValueError("only integer PCM16 supported")
+    n = len(data_body) // 2 // n_ch
+    return rate, n_ch, struct.unpack(f"<{n * n_ch}h", data_body[: n * n_ch * 2])
+
+
+def _wav_meta(b: bytes) -> tuple:
+    import math
+
+    rate, n_ch, samples = _wav_pcm16(b)
+    n = len(samples) // n_ch
+    rms = math.sqrt(sum(s * s for s in samples) / max(len(samples), 1))
+    return rate, n_ch, 16, n, round(1000.0 * n / rate, 6), round(rms, 6)
+
+
+def parse_wav_metadata(with_payload: DataFrame) -> DataFrame:
+    """REAL decode: the RIFF chunk walk of :func:`_wav_pcm16`, then RMS
+    loudness from the 16-bit PCM frames — no external codec,
+    ``struct`` + stdlib math. Runs as :func:`map_decode` so each Arrow
     batch crosses the JVM↔Python boundary once; at 100 TB this is the
     same shape as a PIL/libav decode stage, with the scan partitioning
     carrying the parallelism.
@@ -242,99 +277,59 @@ def parse_wav_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataF
     Fault isolation: a malformed payload yields a row of NULL metadata
     for its id instead of killing the whole Arrow batch/task — one bad
     blob out of a billion must not fail the stage."""
-    import math
-    import struct
+    return map_decode(with_payload, _wav_meta, WAV_META_SCHEMA)
 
-    def parse_one(b: bytes):
-        if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-            return None
-        fmt_body = data_body = None
-        off = 12
-        while off + 8 <= len(b):
-            cid = b[off : off + 4]
-            (sz,) = struct.unpack("<I", b[off + 4 : off + 8])
-            body = b[off + 8 : off + 8 + sz]
-            if cid in (b"fmt ", b"data") and len(body) < sz:
-                # truncated payload: declared size overruns the blob.
-                # NULL row, never plausible-but-wrong stats over a
-                # partial frame slice (fault-isolation contract).
-                return None
-            if cid == b"fmt ":
-                fmt_body = body
-            elif cid == b"data":
-                data_body = body
-            off += 8 + sz + (sz & 1)  # RIFF chunks are word-aligned
-        if fmt_body is None or data_body is None or len(fmt_body) < 16:
-            return None
-        tag, n_ch, rate, _brate, _align, bits = struct.unpack(
-            "<HHIIHH", fmt_body[:16]
-        )
-        if tag == 0xFFFE and len(fmt_body) >= 26:  # EXTENSIBLE: real
-            (tag,) = struct.unpack("<H", fmt_body[24:26])  # tag in GUID
-        if tag != 1 or bits != 16 or n_ch == 0 or rate == 0:
-            return None  # only integer PCM16 is in scope
-        n = len(data_body) // 2 // n_ch
-        samples = struct.unpack(f"<{n * n_ch}h", data_body[: n * n_ch * 2])
-        rms = math.sqrt(sum(s * s for s in samples) / max(len(samples), 1))
-        return rate, n_ch, bits, n, round(1000.0 * n / rate, 6), round(rms, 6)
 
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    meta = parse_one(bytes(payload))
-                except Exception:
-                    meta = None
-                rows.append((int(i), *(meta or (None,) * 6)))
-            cols = list(zip(*rows)) if rows else [[]] * 7
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
-                    "sample_rate": pd.array(cols[1], dtype="Int32"),
-                    "n_channels": pd.array(cols[2], dtype="Int32"),
-                    "bits": pd.array(cols[3], dtype="Int32"),
-                    "n_samples": pd.array(cols[4], dtype="Int32"),
-                    "duration_ms": pd.array(cols[5], dtype="Float64"),
-                    "rms": pd.array(cols[6], dtype="Float64"),
-                }
-            )
-
-    return with_payload.mapInPandas(run, WAV_META_SCHEMA)
+def wav_samples(payload: bytes) -> tuple[int, list[int]]:
+    """Decode a PCM16 WAV payload to (rate, mono samples) — channel-
+    averaged for multi-channel input. Same RIFF chunk walk as
+    `parse_wav_metadata`; raises ``ValueError`` on anything that is
+    not integer PCM16."""
+    rate, n_ch, flat = _wav_pcm16(payload)
+    if n_ch == 1:
+        return rate, list(flat)
+    return rate, [
+        sum(flat[i * n_ch : (i + 1) * n_ch]) // n_ch
+        for i in range(len(flat) // n_ch)
+    ]
 
 
 # --- BMP: the REAL image modality (stdlib-only, like WAV for audio) ---
 
 
-def _bgr_pixel_rows(doc_id: int, seed_text: str, width: int, height: int) -> bytes:
-    """Deterministic bottom-up padded BGR pixel rows — the raw DIB
-    payload shared by the BMP synthesizer and (per frame) the AVI
-    synthesizer, so an AVI frame is BYTE-IDENTICAL to the BMP built
-    from the same (doc_id, seed) recipe: the cross-format pin the
-    video tests rely on."""
+def _recipe_rows(
+    doc_id: int, seed_text: str, width: int, height: int
+) -> list[list[tuple[int, int, int]]]:
+    """The synthesizers' deterministic pixel recipe: rows ``y = 0 ..
+    height - 1`` of ``(r, g, b)``, a gradient hashed with the text.
+    PNG and JPEG store row 0 at the top; BMP and AVI frames store it
+    first in the bottom-up DIB, i.e. at the bottom — the same pixels
+    flipped, so every format's decoded stats agree (which the tests
+    exploit) and an AVI frame is BYTE-IDENTICAL to the BMP pixel data
+    built from the same (doc_id, seed): the cross-format pin the video
+    tests rely on."""
     import hashlib
 
     h = int(hashlib.md5(seed_text.encode()).hexdigest()[:8], 16)
-    rows = []
-    pad = (-(width * 3)) % 4
-    for y in range(height):  # bottom-up row order, per spec
-        row = bytearray()
-        for x in range(width):
-            r = (x * 255 // max(width - 1, 1)) ^ (h & 0xFF)
-            g = (y * 255 // max(height - 1, 1)) ^ ((h >> 8) & 0xFF)
-            b = (doc_id * 37 + x * y) % 256
-            row += bytes((b & 0xFF, g & 0xFF, r & 0xFF))  # BGR
-        row += b"\x00" * pad
-        rows.append(bytes(row))
-    return b"".join(rows)
+    return [
+        [
+            (
+                (x * 255 // max(width - 1, 1)) ^ (h & 0xFF),
+                (y * 255 // max(height - 1, 1)) ^ ((h >> 8) & 0xFF),
+                (doc_id * 37 + x * y) % 256,
+            )
+            for x in range(width)
+        ]
+        for y in range(height)
+    ]
 
 
 def bmp_wrap(pixel_data: bytes, width: int, height: int) -> bytes:
     """Wrap raw bottom-up padded BGR rows in BMP headers — valid
-    24-bit BMP out. Used by the synthesizer AND by ``sample_frames``
-    to emit each sampled AVI frame as a standalone decodable image."""
+    24-bit BMP out (a negative ``height`` marks top-down rows). Used
+    by the synthesizers, by :func:`resize_bmp`, and by
+    ``sample_frames`` to emit each sampled AVI frame as a standalone
+    decodable image."""
     import struct
 
     info = struct.pack(
@@ -349,35 +344,21 @@ def bmp_wrap(pixel_data: bytes, width: int, height: int) -> bytes:
 def synthesize_bmp(doc_id: int, seed_text: str, width: int = 16, height: int = 16) -> bytes:
     """Deterministic 24-bit uncompressed BMP bytes — a real, spec-valid
     image (BITMAPFILEHEADER + BITMAPINFOHEADER + bottom-up BGR rows
-    with 4-byte row padding) any viewer opens. Pixels are a horizontal
-    gradient hashed with the text, so fixtures are stable across runs
-    and engines. Pure stdlib: BMP is the image format this container
-    CAN do end-to-end — the decode stage runs on REAL bytes, not a
+    with 4-byte row padding) any viewer opens. Pixels follow
+    :func:`_recipe_rows`, so fixtures are stable across runs and
+    engines. Pure stdlib: BMP is the image format this container CAN
+    do end-to-end — the decode stage runs on REAL bytes, not a
     ``fake=True`` stand-in."""
-    return bmp_wrap(
-        _bgr_pixel_rows(doc_id, seed_text, width, height), width, height
-    )
+    return rows_to_bmp(_recipe_rows(doc_id, seed_text, width, height)[::-1])
 
 
 def attach_bmp_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    width: int = 16, height: int = 16,
+    df: DataFrame, width: int = 16, height: int = 16
 ) -> DataFrame:
     """Image variant of ``attach_wav_payload``: a real BMP per row."""
-    import pandas as pd
-
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_bmp(ids, texts):
-        return pd.Series(
-            [synthesize_bmp(int(i), t or "", width, height)
-             for i, t in zip(ids, texts)]
-        )
-
-    make_bmp = scalar_pandas_udf("binary", _make_bmp)
-
-    return df.select(
-        id_col, make_bmp(F.col(id_col), F.col(text_col)).alias("payload")
+    return _synthesis_stage(
+        df.select("doc_id", "text"),
+        lambda i, t: synthesize_bmp(i, t or "", width, height),
     )
 
 
@@ -387,78 +368,73 @@ BMP_META_SCHEMA = (
 )
 
 
-def parse_bmp_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL image decode, stdlib-only: parse the BMP headers (file
-    header magic/offset, DIB dimensions/depth, top-down vs bottom-up
-    sign, row padding) and compute per-channel means + BT.601 luma
-    from the actual pixel bytes. Runs as ``mapInPandas`` — one Arrow
-    crossing per batch; at 100 TB this is the identical stage shape
-    as a PIL/turbojpeg decode, with scan partitioning carrying the
-    parallelism (the codec is the only swap).
+def _image_meta(
+    width: int, height: int, bpp: int, pixels: bytes, step: int,
+    rgb: tuple[int, int, int] = (0, 1, 2),
+) -> tuple:
+    """The ``BMP_META_SCHEMA`` outputs from packed pixel bytes, shared
+    by the BMP, PNG and JPEG parsers: per-channel means over the
+    ``width x height`` pixels whose R, G, B bytes sit at offsets
+    ``rgb`` of each ``step``-byte pixel, plus BT.601 luma."""
+    n = width * height
+    r, g, b = rgb
+    mr = sum(pixels[r::step]) / n
+    mg = sum(pixels[g::step]) / n
+    mb = sum(pixels[b::step]) / n
+    luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
+    return (
+        width, height, bpp,
+        round(mr, 6), round(mg, 6), round(mb, 6), round(luma, 6),
+    )
+
+
+def _bmp_layout(b: bytes) -> tuple[int, int, int, int, bool]:
+    """Validated headers of an uncompressed 24-bit BMP (file header
+    magic/offset, DIB dimensions/depth, top-down vs bottom-up sign,
+    row padding): ``(pixel offset, width, height, row stride,
+    top_down)``. Raises ``ValueError`` on anything out of scope."""
+    import struct
+
+    if len(b) < 54 or b[:2] != b"BM":
+        raise ValueError("not a BMP")
+    (_, _, _, offset) = struct.unpack("<IHHI", b[2:14])
+    hdr_size, width, height = struct.unpack("<Iii", b[14:26])
+    planes, bpp, compression = struct.unpack("<HHI", b[26:34])
+    if hdr_size < 40 or planes != 1 or bpp != 24 or compression != 0:
+        raise ValueError("unsupported BMP variant")
+    top_down = height < 0
+    height = abs(height)
+    if width <= 0 or height <= 0:
+        raise ValueError("bad BMP dimensions")
+    stride = (width * 3 + 3) & ~3
+    if len(b) < offset + stride * height:
+        raise ValueError("truncated BMP pixel data")
+    return offset, width, height, stride, top_down
+
+
+def _bmp_meta(b: bytes) -> tuple:
+    offset, width, height, stride, _ = _bmp_layout(b)
+    # means are row-order independent, so top_down needs no flip; rows
+    # without padding are already one contiguous pixel run
+    row, end = width * 3, offset + stride * height
+    pixels = b[offset:end] if stride == row else b"".join(
+        [b[o : o + row] for o in range(offset, end, stride)]
+    )
+    return _image_meta(width, height, 24, pixels, 3, (2, 1, 0))
+
+
+def parse_bmp_metadata(with_payload: DataFrame) -> DataFrame:
+    """REAL image decode, stdlib-only: parse the BMP headers
+    (:func:`_bmp_layout`) and compute per-channel means + BT.601 luma
+    from the actual pixel bytes. Runs as :func:`map_decode` — one
+    Arrow crossing per batch; at 100 TB this is the identical stage
+    shape as a PIL/turbojpeg decode, with scan partitioning carrying
+    the parallelism (the codec is the only swap).
 
     Fault isolation: malformed payloads yield NULL metadata rows, as
     in :func:`parse_wav_metadata` — only uncompressed 24-bit BMPs are
     in scope; anything else is a NULL row, not a task failure."""
-    import struct
-
-    def parse_one(b: bytes):
-        if len(b) < 54 or b[:2] != b"BM":
-            return None
-        (_, _, _, offset) = struct.unpack("<IHHI", b[2:14])
-        hdr_size, width, height = struct.unpack("<Iii", b[14:26])
-        planes, bpp, compression = struct.unpack("<HHI", b[26:34])
-        if hdr_size < 40 or planes != 1 or bpp != 24 or compression != 0:
-            return None
-        top_down = height < 0
-        height = abs(height)
-        if width <= 0 or height <= 0:
-            return None
-        stride = (width * 3 + 3) & ~3
-        if len(b) < offset + stride * height:
-            return None
-        sr = sg = sb = 0
-        for y in range(height):
-            row_off = offset + y * stride
-            row = b[row_off : row_off + width * 3]
-            sb += sum(row[0::3])
-            sg += sum(row[1::3])
-            sr += sum(row[2::3])
-        n = width * height
-        mr, mg, mb = sr / n, sg / n, sb / n
-        luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
-        # means are row-order independent, so top_down needs no flip
-        _ = top_down
-        return (
-            width, height, bpp,
-            round(mr, 6), round(mg, 6), round(mb, 6), round(luma, 6),
-        )
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    meta = parse_one(bytes(payload))
-                except Exception:
-                    meta = None
-                rows.append((int(i), *(meta or (None,) * 7)))
-            cols = list(zip(*rows)) if rows else [[]] * 8
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
-                    "width": pd.array(cols[1], dtype="Int32"),
-                    "height": pd.array(cols[2], dtype="Int32"),
-                    "bpp": pd.array(cols[3], dtype="Int32"),
-                    "mean_r": pd.array(cols[4], dtype="Float64"),
-                    "mean_g": pd.array(cols[5], dtype="Float64"),
-                    "mean_b": pd.array(cols[6], dtype="Float64"),
-                    "luma": pd.array(cols[7], dtype="Float64"),
-                }
-            )
-
-    return with_payload.mapInPandas(run, BMP_META_SCHEMA)
+    return map_decode(with_payload, _bmp_meta, BMP_META_SCHEMA)
 
 
 def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes:
@@ -484,36 +460,19 @@ def resize_bmp(payload: bytes, out_w: int, out_h: int) -> bytes:
             row += b[p : p + 3]
         row += b"\x00" * out_pad
         rows.append(bytes(row))
-    pixel_data = b"".join(rows)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, out_w, out_h if height > 0 else -out_h,
-        1, 24, 0, len(pixel_data), 2835, 2835, 0, 0,
-    )
-    off = 14 + 40
-    hdr = b"BM" + struct.pack("<IHHI", off + len(pixel_data), 0, 0, off)
-    return hdr + info + pixel_data
+    return bmp_wrap(b"".join(rows), out_w, out_h if height > 0 else -out_h)
 
 
-def resize_bmp_payloads(
-    with_payload: DataFrame, out_w: int, out_h: int, id_col: str = "doc_id"
-) -> DataFrame:
+def resize_bmp_payloads(with_payload: DataFrame, out_w: int, out_h: int) -> DataFrame:
     """Distributed real-image resize: every payload decoded, resampled,
-    re-encoded inside Arrow batches — the thumbnail stage of an image
-    training pipeline, running genuine bytes end-to-end."""
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    rb = resize_bmp(bytes(payload), out_w, out_h)
-                except Exception:
-                    rb = None
-                out.append({"doc_id": int(i), "payload": rb})
-            yield pd.DataFrame(out)
-
-    return with_payload.mapInPandas(run, f"{id_col} bigint, payload binary")
+    re-encoded inside Arrow batches (:func:`map_decode`) — the
+    thumbnail stage of an image training pipeline, running genuine
+    bytes end-to-end. Undecodable payloads yield NULL-payload rows."""
+    return map_decode(
+        with_payload,
+        lambda p: (resize_bmp(p, out_w, out_h),),
+        "doc_id bigint, payload binary",
+    )
 
 
 def bmp_pixels(b: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
@@ -522,22 +481,7 @@ def bmp_pixels(b: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
     :func:`parse_bmp_metadata` (which only needs channel sums), used
     by the format-generic :func:`image_pixels` dispatch. Raises
     ``ValueError`` on anything out of scope."""
-    import struct
-
-    if len(b) < 54 or b[:2] != b"BM":
-        raise ValueError("not a BMP")
-    (_, _, _, offset) = struct.unpack("<IHHI", b[2:14])
-    hdr_size, width, height = struct.unpack("<Iii", b[14:26])
-    planes, bpp, compression = struct.unpack("<HHI", b[26:34])
-    if hdr_size < 40 or planes != 1 or bpp != 24 or compression != 0:
-        raise ValueError("unsupported BMP variant")
-    top_down = height < 0
-    height = abs(height)
-    if width <= 0 or height <= 0:
-        raise ValueError("bad BMP dimensions")
-    stride = (width * 3 + 3) & ~3
-    if len(b) < offset + stride * height:
-        raise ValueError("truncated BMP pixel data")
+    offset, width, height, stride, top_down = _bmp_layout(b)
     rows = []
     for y in range(height):
         sy = y if top_down else height - 1 - y
@@ -588,43 +532,19 @@ def encode_png(rows: list[list[tuple[int, int, int]]]) -> bytes:
 
 def synthesize_png(doc_id: int, seed_text: str, width: int = 16, height: int = 16) -> bytes:
     """Deterministic truecolor (8-bit RGB) PNG bytes — a real,
-    spec-valid image (see :func:`encode_png`). Same pixel recipe as
-    :func:`synthesize_bmp`, so the two formats' decoded stats agree —
-    which the tests exploit."""
-    import hashlib
-
-    h = int(hashlib.md5(seed_text.encode()).hexdigest()[:8], 16)
-    rows = []
-    for y in range(height):
-        row = []
-        for x in range(width):
-            r = (x * 255 // max(width - 1, 1)) ^ (h & 0xFF)
-            g = (y * 255 // max(height - 1, 1)) ^ ((h >> 8) & 0xFF)
-            b = (doc_id * 37 + x * y) % 256
-            row.append((r & 0xFF, g & 0xFF, b & 0xFF))
-        rows.append(row)
-    return encode_png(rows)
+    spec-valid image (see :func:`encode_png`). Same pixel recipe
+    (:func:`_recipe_rows`) as :func:`synthesize_bmp`, so the two
+    formats' decoded stats agree — which the tests exploit."""
+    return encode_png(_recipe_rows(doc_id, seed_text, width, height))
 
 
 def attach_png_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    width: int = 16, height: int = 16,
+    df: DataFrame, width: int = 16, height: int = 16
 ) -> DataFrame:
     """PNG variant of ``attach_bmp_payload``: a real PNG per row."""
-    import pandas as pd
-
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_png(ids, texts):
-        return pd.Series(
-            [synthesize_png(int(i), t or "", width, height)
-             for i, t in zip(ids, texts)]
-        )
-
-    make_png = scalar_pandas_udf("binary", _make_png)
-
-    return df.select(
-        id_col, make_png(F.col(id_col), F.col(text_col)).alias("payload")
+    return _synthesis_stage(
+        df.select("doc_id", "text"),
+        lambda i, t: synthesize_png(i, t or "", width, height),
     )
 
 
@@ -722,60 +642,21 @@ def png_pixels(b: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]]:
     return width, height, rows
 
 
-def parse_png_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def _png_meta(b: bytes) -> tuple:
+    width, height, channels, lines = _png_defiltered(b)
+    return _image_meta(width, height, 8 * channels, b"".join(lines), channels)
+
+
+def parse_png_metadata(with_payload: DataFrame) -> DataFrame:
     """REAL PNG decode, stdlib-only (see :func:`_png_defiltered` for
     the recovery pipeline), then per-channel means + BT.601 luma from
     the recovered pixels. Same output schema as
-    :func:`parse_bmp_metadata` (``BMP_META_SCHEMA``), so downstream
-    stages are format-agnostic — exactly how a real multi-format
-    decode stage presents. Malformed payloads (bad magic, CRC
-    mismatch, truncated IDAT, unsupported color type/depth) yield
-    NULL-metadata rows, never task failures."""
-
-    def parse_one(b: bytes):
-        try:
-            width, height, channels, lines = _png_defiltered(b)
-        except Exception:
-            return None
-        sr = sg = sb = 0
-        for line in lines:
-            sr += sum(line[0::channels])
-            sg += sum(line[1::channels])
-            sb += sum(line[2::channels])
-        n = width * height
-        mr, mg, mb = sr / n, sg / n, sb / n
-        luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
-        return (
-            width, height, 8 * channels,
-            round(mr, 6), round(mg, 6), round(mb, 6), round(luma, 6),
-        )
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    meta = parse_one(bytes(payload))
-                except Exception:
-                    meta = None
-                rows.append((int(i), *(meta or (None,) * 7)))
-            cols = list(zip(*rows)) if rows else [[]] * 8
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
-                    "width": pd.array(cols[1], dtype="Int32"),
-                    "height": pd.array(cols[2], dtype="Int32"),
-                    "bpp": pd.array(cols[3], dtype="Int32"),
-                    "mean_r": pd.array(cols[4], dtype="Float64"),
-                    "mean_g": pd.array(cols[5], dtype="Float64"),
-                    "mean_b": pd.array(cols[6], dtype="Float64"),
-                    "luma": pd.array(cols[7], dtype="Float64"),
-                }
-            )
-
-    return with_payload.mapInPandas(run, BMP_META_SCHEMA)
+    :func:`parse_bmp_metadata` (``BMP_META_SCHEMA``, bpp = 8 x
+    channels), so downstream stages are format-agnostic — exactly how
+    a real multi-format decode stage presents. Malformed payloads (bad
+    magic, CRC mismatch, truncated IDAT, unsupported color type/depth)
+    yield NULL-metadata rows, never task failures."""
+    return map_decode(with_payload, _png_meta, BMP_META_SCHEMA)
 
 
 # --- JPEG: third REAL image format (baseline DCT codec, stdlib) -------
@@ -791,47 +672,33 @@ def synthesize_jpeg(
     top-down pixel recipe as :func:`synthesize_png`, so decoded stats
     agree across formats within the quantizer loss — which the tests
     bound. Codec: :mod:`prisma_migrator_spark.llm.jpeg`."""
-    import hashlib
-
     from prisma_migrator_spark.llm.jpeg import encode_jpeg
 
-    h = int(hashlib.md5(seed_text.encode()).hexdigest()[:8], 16)
-    rows = []
-    for y in range(height):
-        row = []
-        for x in range(width):
-            r = (x * 255 // max(width - 1, 1)) ^ (h & 0xFF)
-            g = (y * 255 // max(height - 1, 1)) ^ ((h >> 8) & 0xFF)
-            b = (doc_id * 37 + x * y) % 256
-            row.append((r & 0xFF, g & 0xFF, b & 0xFF))
-        rows.append(row)
-    return encode_jpeg(rows, quality=quality)
-
-
-def attach_jpeg_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    width: int = 16, height: int = 16, quality: int = 90,
-) -> DataFrame:
-    """JPEG variant of ``attach_bmp_payload``: a real baseline JPEG
-    per row, encoded inside Arrow batches."""
-    import pandas as pd
-
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_jpeg(ids, texts):
-        return pd.Series(
-            [synthesize_jpeg(int(i), t or "", width, height, quality)
-             for i, t in zip(ids, texts)]
-        )
-
-    make_jpeg = scalar_pandas_udf("binary", _make_jpeg)
-
-    return df.select(
-        id_col, make_jpeg(F.col(id_col), F.col(text_col)).alias("payload")
+    return encode_jpeg(
+        _recipe_rows(doc_id, seed_text, width, height), quality=quality
     )
 
 
-def parse_jpeg_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def attach_jpeg_payload(
+    df: DataFrame, width: int = 16, height: int = 16, quality: int = 90
+) -> DataFrame:
+    """JPEG variant of ``attach_bmp_payload``: a real baseline JPEG
+    per row, encoded inside Arrow batches."""
+    return _synthesis_stage(
+        df.select("doc_id", "text"),
+        lambda i, t: synthesize_jpeg(i, t or "", width, height, quality),
+    )
+
+
+def _jpeg_meta(b: bytes) -> tuple:
+    from prisma_migrator_spark.llm.jpeg import decode_jpeg
+
+    width, height, rows = decode_jpeg(b)
+    pixels = bytes(v for row in rows for px in row for v in px)
+    return _image_meta(width, height, 24, pixels, 3)
+
+
+def parse_jpeg_metadata(with_payload: DataFrame) -> DataFrame:
     """REAL JPEG decode, stdlib-only: full baseline pipeline (marker
     walk, canonical Huffman, dequantize, IDCT, YCbCr->RGB — see
     :mod:`prisma_migrator_spark.llm.jpeg`), then per-channel means +
@@ -839,50 +706,7 @@ def parse_jpeg_metadata(with_payload: DataFrame, id_col: str = "doc_id") -> Data
     (bpp = 24) like the BMP/PNG parsers, so downstream stages stay
     format-agnostic. Malformed/progressive/subsampled payloads yield
     NULL-metadata rows, never task failures."""
-    from prisma_migrator_spark.llm.jpeg import decode_jpeg
-
-    def parse_one(b: bytes):
-        width, height, rows = decode_jpeg(b)
-        sr = sg = sb = 0
-        for row in rows:
-            for r, g, bl in row:
-                sr += r
-                sg += g
-                sb += bl
-        n = width * height
-        mr, mg, mb = sr / n, sg / n, sb / n
-        luma = 0.299 * mr + 0.587 * mg + 0.114 * mb
-        return (
-            width, height, 24,
-            round(mr, 6), round(mg, 6), round(mb, 6), round(luma, 6),
-        )
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
-                try:
-                    meta = parse_one(bytes(payload))
-                except Exception:
-                    meta = None
-                rows.append((int(i), *(meta or (None,) * 7)))
-            cols = list(zip(*rows)) if rows else [[]] * 8
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.array(cols[0], dtype="int64"),
-                    "width": pd.array(cols[1], dtype="Int32"),
-                    "height": pd.array(cols[2], dtype="Int32"),
-                    "bpp": pd.array(cols[3], dtype="Int32"),
-                    "mean_r": pd.array(cols[4], dtype="Float64"),
-                    "mean_g": pd.array(cols[5], dtype="Float64"),
-                    "mean_b": pd.array(cols[6], dtype="Float64"),
-                    "luma": pd.array(cols[7], dtype="Float64"),
-                }
-            )
-
-    return with_payload.mapInPandas(run, BMP_META_SCHEMA)
+    return map_decode(with_payload, _jpeg_meta, BMP_META_SCHEMA)
 
 
 # --- AVI: the REAL video modality (stdlib-only, multi-frame RIFF) -----
@@ -906,7 +730,9 @@ def synthesize_avi(
     container layer needs no codec; only lossy compression would."""
     return avi_wrap(
         [
-            _bgr_pixel_rows(doc_id, f"{seed_text}|f{i}", width, height)
+            rows_to_dib(
+                _recipe_rows(doc_id, f"{seed_text}|f{i}", width, height)[::-1]
+            )
             for i in range(n_frames)
         ],
         width,
@@ -973,24 +799,12 @@ def avi_wrap(
 
 
 def attach_avi_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-    width: int = 16, height: int = 16, n_frames: int = 8,
+    df: DataFrame, width: int = 16, height: int = 16, n_frames: int = 8
 ) -> DataFrame:
     """Video variant of ``attach_wav_payload``: a real AVI per row."""
-    import pandas as pd
-
-    from prisma_migrator_spark.functions.arrow import scalar_pandas_udf
-
-    def _make_avi(ids, texts):
-        return pd.Series(
-            [synthesize_avi(int(i), t or "", width, height, n_frames)
-             for i, t in zip(ids, texts)]
-        )
-
-    make_avi = scalar_pandas_udf("binary", _make_avi)
-
-    return df.select(
-        id_col, make_avi(F.col(id_col), F.col(text_col)).alias("payload")
+    return _synthesis_stage(
+        df.select("doc_id", "text"),
+        lambda i, t: synthesize_avi(i, t or "", width, height, n_frames),
     )
 
 
@@ -1093,11 +907,7 @@ FRAME_SCHEMA = (
 )
 
 
-def sample_frames(
-    df: DataFrame,
-    n_frames: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """REAL frame sampling for AVI payloads: one output row per
     sampled frame (``mapInPandas`` fan-out — batch in, multiple rows
     out, the stage shape a libav decoder uses). Frames are located
@@ -1115,7 +925,7 @@ def sample_frames(
     def run(batches):
         for pdf in batches:
             rows = []
-            for i, payload in zip(pdf[id_col], pdf["payload"]):
+            for i, payload in zip(pdf["doc_id"], pdf["payload"]):
                 try:
                     parsed = parse_avi(bytes(payload))
                 except Exception:
@@ -1144,7 +954,7 @@ def sample_frames(
                 }
             )
 
-    return df.select(id_col, "payload").mapInPandas(run, FRAME_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, FRAME_SCHEMA)
 
 
 # --- perceptual hashing (image near-dup dedup) ------------------------
@@ -1220,32 +1030,17 @@ def phash64(payload: bytes) -> str:
     return "".join("1" if v > med else "0" for v in low)
 
 
-def image_phash(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Arrow-batched pHash stage: ``(id, payload)`` -> ``(id, phash)``
-    via ``mapInPandas`` — decode + DCT are per-row Python compute
-    (the justified UDF shape for binary media; no built-in expresses
-    a codec), batched through Arrow, embarrassingly parallel, zero
-    shuffle. Undecodable payloads are DROPPED (fault isolation: a
-    corrupt image can't be near-anything), never task failures."""
-    import pandas as pd
-
-    schema = f"{id_col} bigint, phash string"
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    hashes.append(phash64(bytes(payload)))
-                    ids.append(int(i))
-                except Exception:
-                    continue
-            yield pd.DataFrame({id_col: pd.array(ids, dtype="int64"),
-                                "phash": hashes})
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+def image_phash(df: DataFrame) -> DataFrame:
+    """Arrow-batched pHash stage: ``(doc_id, payload)`` -> ``(doc_id,
+    phash)`` via :func:`map_decode` — decode + DCT are per-row Python
+    compute (the justified UDF shape for binary media; no built-in
+    expresses a codec), batched through Arrow, embarrassingly
+    parallel, zero shuffle. Undecodable payloads are DROPPED (fault
+    isolation: a corrupt image can't be near-anything), never task
+    failures."""
+    return map_decode(
+        df, lambda p: (phash64(p),), "doc_id bigint, phash string"
+    ).where(F.col("phash").isNotNull())
 
 
 def pattern_rows(
@@ -1298,7 +1093,6 @@ def rows_to_bmp(rows: list[list[tuple[int, int, int]]]) -> bytes:
 
 def attach_image_variant_payload(
     df: DataFrame,
-    id_col: str = "doc_id",
     group_size: int = 4,
     width: int = 32,
     height: int = 32,
@@ -1316,14 +1110,10 @@ def attach_image_variant_payload(
     - variant 2: JPEG re-encode at ``jpeg_quality`` (lossy)
     - variant 3: nearest-neighbor resize to ``resize_to`` px (BMP)
 
-    Synthesis runs inside Arrow batches (``mapInPandas``), like every
-    attach stage here; group membership is ``id``-derived so the
-    corpus is deterministic at any scale factor."""
-    import pandas as pd
-
+    Synthesis runs inside Arrow batches (:func:`_synthesis_stage`),
+    like every attach stage here; group membership is ``id``-derived
+    so the corpus is deterministic at any scale factor."""
     from prisma_migrator_spark.llm.jpeg import encode_jpeg
-
-    schema = f"{id_col} bigint, payload binary"
 
     def _make(i: int) -> bytes:
         rows = pattern_rows(i // group_size, width, height)
@@ -1337,15 +1127,7 @@ def attach_image_variant_payload(
             return resize_bmp(bmp, resize_to, resize_to)
         return bmp
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {id_col: pd.array(ids, dtype="int64"),
-                 "payload": [_make(i) for i in ids]}
-            )
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synthesis_stage(df.select("doc_id"), _make)
 
 
 # --- audio fingerprinting (near-dup dedup, r7) -------------------------
@@ -1361,63 +1143,6 @@ def attach_image_variant_payload(
 # Hamming bits apart, distinct sources >= 12 (24-tone mosaic corpus,
 # 125 groups x 5 variants) — the same margins-then-band-join shape as
 # image pHash, and the SAME banded join (llm/dedup.hamming_band_pairs).
-
-
-def pcm16_wav(rate: int, samples: list[int]) -> bytes:
-    """Wrap mono 16-bit PCM samples in a minimal RIFF/WAVE container
-    (the encode counterpart of the `parse_wav_metadata` walk)."""
-    import struct
-
-    frames = struct.pack(f"<{len(samples)}h", *samples)
-    return (
-        b"RIFF"
-        + struct.pack("<I", 36 + len(frames))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<IHHIIHH", 16, 1, 1, rate, rate * 2, 2, 16)
-        + b"data"
-        + struct.pack("<I", len(frames))
-        + frames
-    )
-
-
-def wav_samples(payload: bytes) -> tuple[int, list[int]]:
-    """Decode a PCM16 WAV payload to (rate, mono samples) — channel-
-    averaged for multi-channel input. Same RIFF chunk walk as
-    `parse_wav_metadata` (word-aligned skips, truncation check);
-    raises ``ValueError`` on anything that is not integer PCM16."""
-    import struct
-
-    b = payload
-    if len(b) < 12 or b[:4] != b"RIFF" or b[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
-    fmt_body = data_body = None
-    off = 12
-    while off + 8 <= len(b):
-        cid = b[off : off + 4]
-        (sz,) = struct.unpack("<I", b[off + 4 : off + 8])
-        body = b[off + 8 : off + 8 + sz]
-        if cid in (b"fmt ", b"data") and len(body) < sz:
-            raise ValueError("truncated WAV chunk")
-        if cid == b"fmt ":
-            fmt_body = body
-        elif cid == b"data":
-            data_body = body
-        off += 8 + sz + (sz & 1)
-    if fmt_body is None or data_body is None or len(fmt_body) < 16:
-        raise ValueError("missing fmt/data chunk")
-    tag, n_ch, rate, _br, _al, bits = struct.unpack("<HHIIHH", fmt_body[:16])
-    if tag == 0xFFFE and len(fmt_body) >= 26:
-        (tag,) = struct.unpack("<H", fmt_body[24:26])
-    if tag != 1 or bits != 16 or n_ch == 0 or rate == 0:
-        raise ValueError("only integer PCM16 supported")
-    n = len(data_body) // 2 // n_ch
-    flat = struct.unpack(f"<{n * n_ch}h", data_body[: n * n_ch * 2])
-    if n_ch == 1:
-        return rate, list(flat)
-    return rate, [
-        sum(flat[i * n_ch : (i + 1) * n_ch]) // n_ch for i in range(n)
-    ]
 
 
 _AFP_BANDS = 64
@@ -1450,29 +1175,13 @@ def afp64(payload: bytes) -> str:
     return "".join("1" if v > mean else "0" for v in e)
 
 
-def audio_fingerprint(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Arrow-batched fingerprint stage: ``(id, payload)`` ->
-    ``(id, afp)``; undecodable payloads are DROPPED (fault
+def audio_fingerprint(df: DataFrame) -> DataFrame:
+    """Arrow-batched fingerprint stage: ``(doc_id, payload)`` ->
+    ``(doc_id, afp)``; undecodable payloads are DROPPED (fault
     isolation), mirroring `image_phash`."""
-    import pandas as pd
-
-    schema = f"{id_col} bigint, afp string"
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, fps = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    fps.append(afp64(bytes(payload)))
-                    ids.append(int(i))
-                except Exception:
-                    continue
-            yield pd.DataFrame({id_col: pd.array(ids, dtype="int64"),
-                                "afp": fps})
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return map_decode(
+        df, lambda p: (afp64(p),), "doc_id bigint, afp string"
+    ).where(F.col("afp").isNotNull())
 
 
 def synthesize_tone_mosaic(
@@ -1524,9 +1233,7 @@ def synthesize_tone_mosaic(
     return pcm16_wav(rate, [int(v) for v in samples])
 
 
-def attach_audio_variant_payload(
-    df: DataFrame, id_col: str = "doc_id", group_size: int = 5
-) -> DataFrame:
+def attach_audio_variant_payload(df: DataFrame, group_size: int = 5) -> DataFrame:
     """Near-duplicate audio corpus: every ``group_size`` consecutive
     ids share one tone mosaic (keyed on ``id // group_size``), each
     id carrying a real transformation of it — the audio ground truth
@@ -1538,10 +1245,6 @@ def attach_audio_variant_payload(
     - variant 3: resynthesized at 16 kHz (same Hz content)
     - variant 4: silence-padded both ends
     """
-    import pandas as pd
-
-    schema = f"{id_col} bigint, payload binary"
-
     def _make(i: int) -> bytes:
         g, v = i // group_size, i % group_size
         if v == 1:
@@ -1554,15 +1257,7 @@ def attach_audio_variant_payload(
             return synthesize_tone_mosaic(g, pad=400)
         return synthesize_tone_mosaic(g)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {id_col: pd.array(ids, dtype="int64"),
-                 "payload": [_make(i) for i in ids]}
-            )
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synthesis_stage(df.select("doc_id"), _make)
 
 
 # --- video fingerprinting (near-dup dedup, r7) --------------------------
@@ -1623,30 +1318,14 @@ def vhash64(payload: bytes) -> str:
     return "".join("1" if 2 * v >= n else "0" for v in votes)
 
 
-def video_phash(
-    df: DataFrame, id_col: str = "doc_id", payload_col: str = "payload"
-) -> DataFrame:
-    """Arrow-batched fingerprint stage: ``(id, payload)`` ->
-    ``(id, vhash)``; undecodable payloads are DROPPED (fault
+def video_phash(df: DataFrame) -> DataFrame:
+    """Arrow-batched fingerprint stage: ``(doc_id, payload)`` ->
+    ``(doc_id, vhash)``; undecodable payloads are DROPPED (fault
     isolation), mirroring :func:`image_phash` /
     :func:`audio_fingerprint`."""
-    import pandas as pd
-
-    schema = f"{id_col} bigint, vhash string"
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids, fps = [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                try:
-                    fps.append(vhash64(bytes(payload)))
-                    ids.append(int(i))
-                except Exception:
-                    continue
-            yield pd.DataFrame({id_col: pd.array(ids, dtype="int64"),
-                                "vhash": fps})
-
-    return df.select(id_col, payload_col).mapInPandas(run, schema)
+    return map_decode(
+        df, lambda p: (vhash64(p),), "doc_id bigint, vhash string"
+    ).where(F.col("vhash").isNotNull())
 
 
 def synthesize_mosaic_avi(
@@ -1683,9 +1362,7 @@ def synthesize_mosaic_avi(
     return avi_wrap(frames, size, size)
 
 
-def attach_video_variant_payload(
-    df: DataFrame, id_col: str = "doc_id", group_size: int = 5
-) -> DataFrame:
+def attach_video_variant_payload(df: DataFrame, group_size: int = 5) -> DataFrame:
     """Near-duplicate video corpus: every ``group_size`` consecutive
     ids share one frame-mosaic source (keyed on ``id // group_size``),
     each id carrying a real transformation of it - the video ground
@@ -1697,10 +1374,6 @@ def attach_video_variant_payload(
     - variant 3: spatially re-rendered at 48px
     - variant 4: brightness re-leveled to 70%
     """
-    import pandas as pd
-
-    schema = f"{id_col} bigint, payload binary"
-
     def _make(i: int) -> bytes:
         g, v = i // group_size, i % group_size
         if v == 1:
@@ -1713,12 +1386,4 @@ def attach_video_variant_payload(
             return synthesize_mosaic_avi(g, scale=0.7)
         return synthesize_mosaic_avi(g)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            ids = [int(i) for i in pdf[id_col]]
-            yield pd.DataFrame(
-                {id_col: pd.array(ids, dtype="int64"),
-                 "payload": [_make(i) for i in ids]}
-            )
-
-    return df.select(id_col).mapInPandas(run, schema)
+    return _synthesis_stage(df.select("doc_id"), _make)

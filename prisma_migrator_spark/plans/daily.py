@@ -186,39 +186,6 @@ def _write_phash_index(
     return spark.read.parquet(path)
 
 
-def build_stored_indexes(
-    spark: SparkSession, history: DataFrame, base: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Persist the three history-side index tables to parquet and
-    return the READ-BACK frames (never the in-memory lineage — the
-    stage joins must consume what a prior ingest actually stored).
-    In production these are maintained incrementally at ingest; the
-    gate rebuilds them per run so back-to-back runs are identical.
-
-    The three writes are independent jobs over disjoint output paths,
-    so they run CONCURRENTLY from a small driver thread pool (guide
-    §2.6 — later jobs back-fill executors freed by the current job's
-    tail); identical bytes land at identical paths, only the wall
-    changes. The composed pipeline goes further and defers each
-    read-back to the stage that consumes it."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        fut_fp = pool.submit(
-            _write_fp_index, spark, history, os.path.join(base, "fp_index")
-        )
-        fut_sig = pool.submit(
-            _write_sig_index, spark, history, os.path.join(base, "sig_index")
-        )
-        fut_phash = pool.submit(
-            _write_phash_index,
-            spark,
-            history,
-            os.path.join(base, "phash_index"),
-        )
-        return fut_fp.result(), fut_sig.result(), fut_phash.result()
-
-
 @query("daily_batch_pipeline")  # rows-only: the modality stage rides
 # the binary pHash decode (no SQL oracle, same reason as
 # image_near_dup_pairs); the full composition is pinned in pytest

@@ -336,3 +336,19 @@ def test_customer_custkey_unique_nonnull_fixture_invariant(spark, sf_dir):
         f"c_custkey not unique ({total} rows, {distinct} distinct) - "
         "the count(*) rewrite is unsound"
     )
+
+
+def test_document_tokens_have_no_underscore_fixture_invariant(spark, sf_dir):
+    """Pins the fixture invariant the merge_phrases oracle rests on:
+    its gaps-and-islands unroll matches the greedy fold only while no
+    raw token contains '_', because a fused ``left_right`` token could
+    otherwise re-match a phrase key in Spark where the oracle's raw
+    adjacent-pair flags cannot. Tokens are split exactly as
+    merge_phrases_q splits them. A fixture regeneration that violates
+    the invariant breaks HERE, not silently in the oracle comparison."""
+    docs = load_table(spark, sf_dir, "documents")
+    toks = docs.select(
+        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
+    )
+    bad = [r.tok for r in toks.where(F.col("tok").contains("_")).limit(5).collect()]
+    assert bad == [], f"document tokens contain '_' - merge_phrases oracle unsound: {bad}"
