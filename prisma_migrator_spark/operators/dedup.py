@@ -1,4 +1,4 @@
-"""Latest-per-key dedup and exact dedup.
+"""Latest-per-key dedup and deterministic batch dedup.
 
 ``latest_per_key`` is the Spark-native form of PostgreSQL
 ``SELECT DISTINCT ON (key) ... ORDER BY key, ts DESC``
@@ -89,13 +89,28 @@ def latest_per_key(
     )
 
 
-def exact_dedupe(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
-    """Exact duplicate removal.
+def dedupe_batch(
+    batch: DataFrame, keys: Sequence[str], order_col: str | None = None
+) -> DataFrame:
+    """One row per key, chosen by the plan and not by which row a
+    partitioning delivers first (as ``dropDuplicates`` does). With
+    ``order_col`` the latest row wins (:func:`latest_per_key`); without
+    it, the row whose orderable non-key columns are smallest as a
+    struct (rows differing only in a MapType column tie).
 
-    With ``keys=None``: full-row ``dropDuplicates()`` (hash-groupBy on
-    all columns). With keys: keeps an arbitrary-but-deterministic row
-    per key? No — Spark's dropDuplicates(keys) keeps an arbitrary row;
-    for deterministic semantics use :func:`latest_per_key`. This
-    variant is the fast path when any representative row is fine.
+    Every keyed writer dedupes its batch with this: ON CONFLICT DO
+    UPDATE raises ``cannot affect row a second time`` on a statement
+    carrying a key twice, and a parquet upsert would otherwise keep
+    whichever duplicate arrives first.
     """
-    return df.dropDuplicates(list(keys)) if keys else df.dropDuplicates()
+    keys = list(keys)
+    if order_col:
+        return latest_per_key(batch, keys, order_col)
+    rest = [
+        f.name
+        for f in batch.schema.fields
+        if f.name not in keys and _orderable(f.dataType)
+    ]
+    if not rest:
+        return batch.dropDuplicates(keys)
+    return latest_per_key(batch, keys, rest[0], rest[1:], descending=False)

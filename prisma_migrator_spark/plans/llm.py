@@ -213,7 +213,19 @@ def corpus_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CLEAN_CORPUS_ORACLE = r"""
+#: The oracles' per-doc quality score over the token list ``w`` and the
+#: raw ``text``: length, stopword share and punctuation, rounded to 6 dp
+#: (the DuckDB side of ``text_stats``' ``quality``).
+_QUALITY_SQL = r"""ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
+             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
+                   ['the','a','an','and','or','of','to','in','is','it',
+                    'for','on','with','as','at','by','this','that'], t)))
+                 / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
+             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
+                           THEN 1.0 ELSE 0.0 END), 6)"""
+
+
+_CLEAN_CORPUS_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id, text,
          string_split_regex(lower(trim(text)), '\s+') AS w
@@ -221,13 +233,7 @@ WITH toks AS (
 ), scored AS (
   SELECT doc_id,
          LEN(w) AS n_tokens,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                   ['the','a','an','and','or','of','to','in','is','it',
-                    'for','on','with','as','at','by','this','that'], t)))
-                 / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS quality,
+         {_QUALITY_SQL} AS quality,
          md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp
   FROM toks
 ), kept AS (
@@ -1024,13 +1030,7 @@ clusters AS (
   SELECT node AS doc_id, MIN(r) AS cluster_id FROM reach GROUP BY node
 ), qual AS (
   SELECT doc_id,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                   ['the','a','an','and','or','of','to','in','is','it',
-                    'for','on','with','as','at','by','this','that'], t)))
-                 / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM (SELECT doc_id, text,
                string_split_regex(lower(trim(text)), '\s+') AS w
         FROM documents)
@@ -2020,16 +2020,10 @@ def label_centroids_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- adaptive quality thresholds (scalar-agg + broadcast, no sort) -----
 
-_QUALITY_CTE = r"""
+_QUALITY_CTE = rf"""
 WITH q AS (
   SELECT doc_id,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                  ['the','a','an','and','or','of','to','in','is','it',
-                   'for','on','with','as','at','by','this','that'], t)))
-                / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM (SELECT doc_id, text,
                string_split_regex(lower(trim(text)), '\s+') AS w
         FROM documents) t
@@ -2129,7 +2123,7 @@ def corpus_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "shuffle_pos")
 
 
-_RECIPE_ORACLE = r"""
+_RECIPE_ORACLE = rf"""
 WITH samp AS (
   SELECT doc_id, text
   FROM documents
@@ -2144,13 +2138,7 @@ WITH samp AS (
   GROUP BY fp
 ), q AS (
   SELECT s.doc_id,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                  ['the','a','an','and','or','of','to','in','is','it',
-                   'for','on','with','as','at','by','this','that'], t)))
-                / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS quality,
+         {_QUALITY_SQL} AS quality,
          LEN(w) AS n_tokens
   FROM (SELECT doc_id, text,
                string_split_regex(lower(trim(text)), '\s+') AS w
@@ -2294,13 +2282,7 @@ WITH toks AS (
 ), scored AS (
   SELECT doc_id, source,
          CAST(LEN(w) AS INT) AS n_tokens,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                   ['the','a','an','and','or','of','to','in','is','it',
-                    'for','on','with','as','at','by','this','that'], t)))
-                 / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM toks
 ), cum AS (
   SELECT doc_id, source, n_tokens, quality,
@@ -2624,20 +2606,14 @@ def ngram_jaccard_prefix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- weighted sampling without replacement -----------------------------
 
-_WSAMPLE_ORACLE = r"""
+_WSAMPLE_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id, source, text,
          string_split_regex(lower(trim(text)), '\s+') AS w
   FROM documents
 ), scored AS (
   SELECT doc_id, source,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                   ['the','a','an','and','or','of','to','in','is','it',
-                    'for','on','with','as','at','by','this','that'], t)))
-                 / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS q
+         {_QUALITY_SQL} AS q
   FROM toks
 ), keyed AS (
   SELECT doc_id, source, q,
@@ -4856,7 +4832,7 @@ def embedding_pca2_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- ranking-metric evaluation of scoring stages -------------------------
 
-_FLUENCY_AUC_ORACLE = r"""
+_FLUENCY_AUC_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ts
   FROM documents WHERE length(trim(text)) > 0
@@ -4867,7 +4843,7 @@ WITH toks AS (
 doc_bigrams AS (
   SELECT doc_id, u.b['w1'] AS w1, u.b['w2'] AS w2
   FROM toks, UNNEST(list_transform(range(1, len(ts)),
-                                   i -> {'w1': ts[i], 'w2': ts[i + 1]})) AS u(b)
+                                   i -> {{'w1': ts[i], 'w2': ts[i + 1]}})) AS u(b)
 ), big AS (
   SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c
   FROM doc_bigrams GROUP BY 1, 2
@@ -4881,13 +4857,7 @@ doc_bigrams AS (
   GROUP BY d.doc_id
 ), q AS (
   SELECT doc_id,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                  ['the','a','an','and','or','of','to','in','is','it',
-                   'for','on','with','as','at','by','this','that'], t)))
-                / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM (SELECT doc_id, text,
                string_split_regex(lower(trim(text)), '\s+') AS w
         FROM documents) t
@@ -4951,7 +4921,7 @@ def fluency_quality_auc_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return roc_auc(_fluency_quality_labeled(spark, sf_dir))
 
 
-_FLUENCY_CALIB_ORACLE = r"""
+_FLUENCY_CALIB_ORACLE = rf"""
 WITH toks AS (
   SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS ts
   FROM documents WHERE length(trim(text)) > 0
@@ -4962,7 +4932,7 @@ WITH toks AS (
 doc_bigrams AS (
   SELECT doc_id, u.b['w1'] AS w1, u.b['w2'] AS w2
   FROM toks, UNNEST(list_transform(range(1, len(ts)),
-                                   i -> {'w1': ts[i], 'w2': ts[i + 1]})) AS u(b)
+                                   i -> {{'w1': ts[i], 'w2': ts[i + 1]}})) AS u(b)
 ), big AS (
   SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c
   FROM doc_bigrams GROUP BY 1, 2
@@ -4976,13 +4946,7 @@ doc_bigrams AS (
   GROUP BY d.doc_id
 ), q AS (
   SELECT doc_id,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                  ['the','a','an','and','or','of','to','in','is','it',
-                   'for','on','with','as','at','by','this','that'], t)))
-                / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM (SELECT doc_id, text,
                string_split_regex(lower(trim(text)), '\s+') AS w
         FROM documents) t
@@ -5662,7 +5626,7 @@ def hashed_doc_vectors_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- dataset card: per-source corpus summary -----------------------------
 
-_DATASET_CARD_ORACLE = r"""
+_DATASET_CARD_ORACLE = rf"""
 WITH base AS (
   SELECT doc_id, source, lang,
          string_split_regex(lower(trim(text)), '\s+') AS w,
@@ -5671,13 +5635,7 @@ WITH base AS (
   FROM documents
 ), q AS (
   SELECT doc_id,
-         ROUND(0.5 * LEAST(LEN(w) / 100.0, 1.0)
-             + 0.4 * (LEN(LIST_FILTER(w, t -> LIST_CONTAINS(
-                  ['the','a','an','and','or','of','to','in','is','it',
-                   'for','on','with','as','at','by','this','that'], t)))
-                / GREATEST(CAST(LEN(w) AS DOUBLE), 1.0))
-             + 0.1 * (CASE WHEN LEN(regexp_extract_all(text, '[.,;:!?]')) > 0
-                           THEN 1.0 ELSE 0.0 END), 6) AS quality
+         {_QUALITY_SQL} AS quality
   FROM base
 ), grp AS (
   SELECT fp, MIN(doc_id) AS keeper FROM base GROUP BY fp

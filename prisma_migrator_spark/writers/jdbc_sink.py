@@ -34,7 +34,8 @@ import math
 from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from prisma_migrator_spark.operators.dedup import dedupe_batch
 
 PG_MAX_PARAMS = 50_000  # reference src/utils/lib.ts:78
 
@@ -118,24 +119,6 @@ def build_staging_merge_sql(
         target = ", ".join(quote_ident(k) for k in key_cols)
         return sql + f" ON CONFLICT ({target}) DO NOTHING"
     return sql + _conflict_clause(key_cols, update_cols)
-
-
-def dedupe_batch(batch: DataFrame, key_cols: Sequence[str]) -> DataFrame:
-    """One row per key, deterministically (min-struct over the other
-    columns). ON CONFLICT DO UPDATE raises ``cannot affect row a
-    second time`` if one statement carries duplicate keys — the
-    reference never hits this only because its scraper de-dupes by
-    handle upstream; the engine must not rely on that."""
-    keys = list(key_cols)
-    rest = [c for c in batch.columns if c not in keys]
-    if not rest:
-        return batch.dropDuplicates(keys)
-    return (
-        batch.groupBy(*keys)
-        .agg(F.min(F.struct(*rest)).alias("__row"))
-        .select(*keys, *[F.col(f"__row.{c}").alias(c) for c in rest])
-        .select(*batch.columns)
-    )
 
 
 def spark_jdbc_staging_writer(

@@ -21,28 +21,29 @@ source columns as ``s.<col>``.
 Plan shape (scale-safe): the target joins the key-deduplicated source
 ONCE on the keys; every matched clause is a projection/filter over
 that single join — no per-clause scans, no driver loops. Inserts are
-one anti-join of the (pre-filtered) source. The write goes through
-the staged-dir + atomic-swap protocol shared by every writer here;
-``cow=True`` confines the join and rewrite to files whose footer key
-range intersects a source key (everything else hard-links over
-byte-identical), the same pruning contract as ``upsert_parquet_cow``.
+one anti-join of the (pre-filtered) source. Only the files whose
+footer range of ``key_cols[0]`` may hold a source key are read,
+joined and rewritten; every other file is hard-linked over
+byte-identical (``upsert._files_holding`` / ``upsert._rewrite_table``,
+the same pruning and staged swap as ``upsert_parquet_cow``). That
+gives the rows of a full-table MERGE: a file holding a source key has
+a footer range containing it, and a file without stats is always
+rewritten.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
 from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from prisma_migrator_spark.operators.driver_state import bounded_collect
+from prisma_migrator_spark.operators.dedup import dedupe_batch
 from prisma_migrator_spark.operators.joins import anti_join
 from prisma_migrator_spark.writers.upsert import (
-    _atomic_swap,
+    _files_holding,
     _part_files,
-    latest_per_key,
+    _rewrite_table,
 )
 
 
@@ -124,7 +125,6 @@ def merge_into(
     when_not_matched_insert: Column | None = None,
     insert: bool = True,
     order_col: str | None = None,
-    cow: bool = False,
 ) -> dict:
     """Execute the MERGE against the parquet table at ``target_path``.
 
@@ -138,89 +138,36 @@ def merge_into(
       target match are inserted (columns missing from the source
       become NULL), optionally gated by the condition.
     - ``order_col`` — in-source replay determinism: latest-wins
-      key-dedup before the merge (same contract as the upsert family).
-    - ``cow=True`` — footer-range file pruning: only files whose
-      ``key_cols[0]`` range intersects a source key join and rewrite;
-      the rest hard-link over byte-identical.
+      key-dedup before the merge; without it the source is deduped by
+      :func:`dedupe_batch`'s smallest-row rule (same contract as the
+      upsert family).
     """
     keys = list(key_cols)
-    src = (
-        latest_per_key(source, keys, order_col)
-        if order_col
-        else source.dropDuplicates(keys)
-    )
+    src = dedupe_batch(source, keys, order_col)
     existing_schema = spark.read.parquet(target_path).schema
     files = _part_files(target_path)
-
-    if cow:
-        from prisma_migrator_spark.writers.layout import file_key_ranges_df
-
-        prune_key = keys[0]
-        rng = file_key_ranges_df(
-            spark, files, prune_key, existing_schema[prune_key].dataType
-        )
-        hits = bounded_collect(
-            src.select(F.col(prune_key).alias("__k"))
-            .distinct()
-            .join(
-                F.broadcast(rng),
-                F.col("__lo").isNull()
-                | (
-                    (F.col("__k") >= F.col("__lo"))
-                    & (F.col("__k") <= F.col("__hi"))
-                ),
-            )
-            .select("__file")
-            .distinct(),
-            len(files),
-            "one row per data file in the table footprint",
-        )
-        matched_files = sorted({r["__file"] for r in hits})
-    else:
-        matched_files = files
-    untouched_files = [f for f in files if f not in set(matched_files)]
-
-    if matched_files:
-        target = spark.read.schema(existing_schema).parquet(*matched_files)
-        result = _merged_frame(
-            target,
-            src,
-            keys,
-            when_matched_delete,
-            when_matched_update,
-            update_set,
-            when_not_matched_insert,
-            insert,
-        )
-    else:
-        # no file holds any source key: the merge reduces to inserts
-        result = _merged_frame(
-            spark.createDataFrame([], existing_schema),
-            src,
-            keys,
-            when_matched_delete,
-            when_matched_update,
-            update_set,
-            when_not_matched_insert,
-            insert,
-        )
-
-    staged_rw = target_path + ".staging.rewrite"
-    result.write.mode("overwrite").parquet(staged_rw)
-    staged = target_path + ".staging"
-    shutil.rmtree(staged, ignore_errors=True)
-    os.makedirs(staged)
-    try:
-        for f in untouched_files:
-            os.link(f, os.path.join(staged, os.path.basename(f)))
-        for f in _part_files(staged_rw):
-            os.rename(f, os.path.join(staged, "m-" + os.path.basename(f)))
-    finally:
-        shutil.rmtree(staged_rw, ignore_errors=True)
-    _atomic_swap(staged, target_path)
+    matched = _files_holding(spark, files, existing_schema, src, keys[0])
+    untouched = sorted(set(files).difference(matched))
+    # no matched file: the merge reduces to the source's inserts
+    target = (
+        spark.read.schema(existing_schema).parquet(*matched)
+        if matched
+        else spark.createDataFrame([], existing_schema)
+    )
+    result = _merged_frame(
+        target,
+        src,
+        keys,
+        when_matched_delete,
+        when_matched_update,
+        update_set,
+        when_not_matched_insert,
+        insert,
+    )
+    _rewrite_table(result, target_path, untouched)
     return {
         "path": target_path,
         "files_total": len(files),
-        "files_rewritten": len(matched_files),
-        "files_kept": len(untouched_files),
+        "files_rewritten": len(matched),
+        "files_kept": len(untouched),
     }

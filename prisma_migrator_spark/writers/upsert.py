@@ -15,10 +15,14 @@ The reference's two write primitives, re-expressed distributed:
 Parquet backend strategy: read existing → keep rows whose key is NOT
 in the incoming batch (for updates) or drop incoming rows whose key
 exists (for do-nothing) → union → write to a staging dir → atomic
-swap. Like the reference (which is non-atomic per batch,
-src/migrate.ts:67-69), concurrent writers are not serialized; unlike
-the reference, a failed write never corrupts the target because the
-swap happens only after the staging write succeeds.
+swap. ``upsert_parquet``, ``upsert_parquet_cow``, ``delete_keys_cow``,
+``merge.merge_into`` and ``compact.compact_small_files`` all do that
+last step through :func:`_rewrite_table`, and the file-granularity
+ones pick their rewrite set with :func:`_files_holding`. Like the
+reference (which is non-atomic per batch, src/migrate.ts:67-69),
+concurrent writers are not serialized; unlike the reference, a failed
+write never corrupts the target because the swap happens only after
+the staging write succeeds.
 
 Scale: both paths are one join keyed on the conflict target. The
 incoming batch is usually much smaller than the target table →
@@ -39,11 +43,12 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from prisma_migrator_spark.operators.dedup import dedupe_batch
 from prisma_migrator_spark.operators.driver_state import bounded_collect
-
-from prisma_migrator_spark.operators.dedup import latest_per_key
 from prisma_migrator_spark.operators.joins import anti_join
+from prisma_migrator_spark.writers.layout import file_key_ranges_df
 
 
 def append_skip_duplicates(
@@ -54,24 +59,12 @@ def append_skip_duplicates(
 ) -> DataFrame:
     """Rows of ``new_rows`` whose key is absent from ``existing`` —
     the dataframe form of ``ON CONFLICT DO NOTHING``. Also dedupes
-    within the batch itself, deterministically: per key, the row that
-    is lexicographically smallest over the remaining columns survives
-    (``min(struct(...))`` partial-aggregates map-side; a bare
-    ``dropDuplicates`` keeps whichever row a partitioning happens to
-    deliver first, which varies across runs/AQE replans)."""
-    keys = list(key_cols)
-    rest = [c for c in new_rows.columns if c not in keys]
-    if rest:
-        in_batch = (
-            new_rows.groupBy(*keys)
-            .agg(F.min(F.struct(*rest)).alias("__row"))
-            .select(*keys, *[F.col(f"__row.{c}").alias(c) for c in rest])
-            .select(*new_rows.columns)
-        )
-    else:
-        in_batch = new_rows.dropDuplicates(keys)
+    within the batch itself, deterministically (:func:`dedupe_batch`)."""
     return anti_join(
-        in_batch, existing, key_cols, broadcast_right=broadcast_existing_keys
+        dedupe_batch(new_rows, key_cols),
+        existing,
+        key_cols,
+        broadcast_right=broadcast_existing_keys,
     )
 
 
@@ -83,6 +76,77 @@ def _atomic_swap(tmp: str, target: str) -> None:
         shutil.rmtree(old, ignore_errors=True)
     else:
         os.rename(tmp, target)
+
+
+def _part_files(path: str) -> list[str]:
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def _files_holding(
+    spark: SparkSession,
+    files: list[str],
+    schema: StructType,
+    keys_df: DataFrame,
+    key: str,
+) -> list[str]:
+    """The data files whose footer range of ``key`` may hold a value of
+    ``keys_df[key]`` — a superset of the files that do. One Spark job:
+    the distinct keys range-joined against the broadcast per-file
+    ranges (|files| rows, metadata-sized). A NULL range means 'no
+    usable stats': such a file joins every key, so it is rewritten
+    whenever ``keys_df`` is non-empty.
+    """
+    rng = file_key_ranges_df(spark, files, key, schema[key].dataType)
+    hits = bounded_collect(
+        keys_df.select(F.col(key).alias("__k"))
+        .distinct()
+        .join(
+            F.broadcast(rng),
+            F.col("__lo").isNull()
+            | ((F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi"))),
+        )
+        .select("__file")
+        .distinct(),
+        len(files),
+        "one row per data file in the table footprint",
+    )
+    return sorted(r["__file"] for r in hits)
+
+
+def _rewrite_table(
+    result: DataFrame, path: str, keep: Sequence[str] = ()
+) -> None:
+    """Replace the table at ``path`` by ``result``'s rows plus the data
+    files ``keep``.
+
+    ``result`` is written to a staging directory, each file of ``keep``
+    is hard-linked beside it (byte-identical, no IO; copied where the
+    filesystem refuses the link), and the directory is swapped in with
+    :func:`_atomic_swap`. The table is untouched until that swap, so a
+    failed write leaves it as it was. ``result`` may read ``path``: it
+    is fully written before anything there moves.
+    """
+    staged = path + ".staging"
+    written = staged + ".rewrite"
+    try:
+        result.write.mode("overwrite").parquet(written)
+        shutil.rmtree(staged, ignore_errors=True)
+        os.makedirs(staged)
+        for f in keep:
+            dst = os.path.join(staged, os.path.basename(f))
+            try:
+                os.link(f, dst)
+            except OSError:
+                shutil.copy2(f, dst)
+        for f in _part_files(written):
+            os.rename(f, os.path.join(staged, os.path.basename(f)))
+    finally:
+        shutil.rmtree(written, ignore_errors=True)
+    _atomic_swap(staged, path)
 
 
 def _merge(
@@ -166,7 +230,8 @@ def upsert_parquet(
       row (DO UPDATE). ``update_cols=[]``: matched keys keep the
       existing row (DO NOTHING), mirroring reference lib.ts:91.
     - ``order_col``: dedupe within the batch keeping the latest by
-      this column (else arbitrary-deterministic first).
+      this column; without it the survivor per key is the row with the
+      smallest remaining columns (:func:`dedupe_batch`).
     - ``allow_schema_evolution``: batch columns the table lacks are
       ADDED (NULL for untouched rows); table columns the batch lacks
       are NULL-filled in the batch (:func:`_align_schemas`). Off by
@@ -184,17 +249,10 @@ def upsert_parquet(
     progress logging (src/utils/lib.ts:97).
     """
     keys = list(key_cols)
-    batch = (
-        latest_per_key(batch, keys, order_col)
-        if order_col
-        else batch.dropDuplicates(keys)
-    )
+    batch = dedupe_batch(batch, keys, order_col)
 
-    exists = os.path.exists(path)
-    if not exists:
-        staged = path + ".staging"
-        batch.write.mode("overwrite").parquet(staged)
-        _atomic_swap(staged, path)
+    if not os.path.exists(path):
+        _rewrite_table(batch, path)
         n = spark.read.parquet(path).count()
         return {"path": path, "inserted": n, "kept": 0, "mode": "create"}
 
@@ -217,21 +275,9 @@ def upsert_parquet(
         # that mode's contract is "matched keys keep the existing row
         # for EVERY column"; the evolved column still lands as NULL
         # for existing keys and with batch values for brand-new keys.
-    result = _merge(existing, batch, keys, update_cols)
-
-    staged = path + ".staging"
-    result.write.mode("overwrite").parquet(staged)
-    _atomic_swap(staged, path)
+    _rewrite_table(_merge(existing, batch, keys, update_cols), path)
     total = spark.read.parquet(path).count()
     return {"path": path, "total": total, "mode": "update" if do_update else "insert_only"}
-
-
-def _part_files(path: str) -> list[str]:
-    return sorted(
-        os.path.join(path, f)
-        for f in os.listdir(path)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
 
 
 def upsert_parquet_cow(
@@ -277,15 +323,9 @@ def upsert_parquet_cow(
     alone and bootstraps the manifest for the next call.
     """
     keys = list(key_cols)
-    batch = (
-        latest_per_key(batch, keys, order_col)
-        if order_col
-        else batch.dropDuplicates(keys)
-    )
+    batch = dedupe_batch(batch, keys, order_col)
     if not os.path.exists(path):
-        staged = path + ".staging"
-        batch.write.mode("overwrite").parquet(staged)
-        _atomic_swap(staged, path)
+        _rewrite_table(batch, path)
         n = spark.read.parquet(path).count()
         out = {"path": path, "inserted": n, "mode": "create"}
         if bloom:
@@ -295,8 +335,6 @@ def upsert_parquet_cow(
                 spark, path, keys[0]
             )
         return out
-
-    from prisma_migrator_spark.writers.layout import file_key_ranges_df
 
     existing_schema = spark.read.parquet(path).schema
     evolved = [c for c in batch.columns if c not in existing_schema.names]
@@ -312,29 +350,7 @@ def upsert_parquet_cow(
         )
     prune_key = keys[0]
     files = _part_files(path)
-    # footer ranges as a DataFrame: driver-serial for small tables,
-    # executor-parallel past the threshold (layout.file_key_ranges_df)
-    # — the serial footer loop dominates CoW planning at 1000s of
-    # files. A NULL range means 'no usable stats': such a file joins
-    # every batch key (conservatively rewritten whenever the batch is
-    # non-empty; an empty batch rewrites nothing, correctly).
-    rng = file_key_ranges_df(
-        spark, files, prune_key, existing_schema[prune_key].dataType
-    )
-    hits = bounded_collect(
-        batch.select(F.col(prune_key).alias("__k"))
-        .distinct()
-        .join(
-            F.broadcast(rng),
-            F.col("__lo").isNull()
-            | ((F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi"))),
-        )
-        .select("__file")
-        .distinct(),
-        len(files),
-        "one row per data file in the table footprint",
-    )
-    rewrite = {r["__file"] for r in hits}
+    rewrite = set(_files_holding(spark, files, existing_schema, batch, prune_key))
 
     if bloom:
         from prisma_migrator_spark.writers import bloom as bloom_sidecar
@@ -359,20 +375,7 @@ def upsert_parquet_cow(
     else:
         # No file can contain any batch key: every batch row is new.
         result = batch.select(*[f.name for f in existing_schema.fields])
-
-    staged_rw = path + ".staging.rewrite"
-    result.write.mode("overwrite").parquet(staged_rw)
-    staged = path + ".staging"
-    shutil.rmtree(staged, ignore_errors=True)
-    os.makedirs(staged)
-    try:
-        for f in untouched:  # hard-link: zero-copy, byte-identical
-            os.link(f, os.path.join(staged, os.path.basename(f)))
-        for f in _part_files(staged_rw):
-            os.rename(f, os.path.join(staged, "m-" + os.path.basename(f)))
-    finally:
-        shutil.rmtree(staged_rw, ignore_errors=True)
-    _atomic_swap(staged, path)
+    _rewrite_table(result, path, untouched)
     out = {
         "path": path,
         "mode": "update" if (update_cols is None or update_cols) else "insert_only",
@@ -419,11 +422,7 @@ def upsert_partitioned(
     by the batch's partition fan-out, not table size.
     """
     keys = list(key_cols)
-    batch = (
-        latest_per_key(batch, keys, order_col)
-        if order_col
-        else batch.dropDuplicates(keys)
-    )
+    batch = dedupe_batch(batch, keys, order_col)
     if not os.path.exists(path):
         batch.write.mode("overwrite").partitionBy(partition_col).parquet(path)
         return {"path": path, "mode": "create", "partitions": "all"}
@@ -484,61 +483,18 @@ def delete_keys_cow(
     if not os.path.exists(path):
         return {"path": path, "mode": "noop", "files_rewritten": 0}
 
-    from prisma_migrator_spark.writers.layout import file_key_ranges_df
-
     existing_schema = spark.read.parquet(path).schema
-    prune_key = keys[0]
     files = _part_files(path)
-    # same pruning source as upsert_parquet_cow: NULL range = no
-    # stats, joins every doomed key (conservative rewrite)
-    rng = file_key_ranges_df(
-        spark, files, prune_key, existing_schema[prune_key].dataType
-    )
-    hits = bounded_collect(
-        doomed.select(F.col(prune_key).alias("__k"))
-        .distinct()
-        .join(
-            F.broadcast(rng),
-            F.col("__lo").isNull()
-            | ((F.col("__k") >= F.col("__lo")) & (F.col("__k") <= F.col("__hi"))),
+    matched = _files_holding(spark, files, existing_schema, doomed, keys[0])
+    untouched = sorted(set(files).difference(matched))
+    if matched:
+        survivors = anti_join(
+            spark.read.schema(existing_schema).parquet(*matched), doomed, keys
         )
-        .select("__file")
-        .distinct(),
-        len(files),
-        "one row per data file in the table footprint",
-    )
-    rewrite = {r["__file"] for r in hits}
-
-    matched = sorted(rewrite)
-    untouched = [f for f in files if f not in rewrite]
-    if not matched:
-        return {
-            "path": path,
-            "mode": "noop",
-            "files_total": len(files),
-            "files_rewritten": 0,
-            "files_kept": len(untouched),
-        }
-
-    survivors = anti_join(
-        spark.read.schema(existing_schema).parquet(*matched), doomed, keys
-    )
-    staged_rw = path + ".staging.rewrite"
-    survivors.write.mode("overwrite").parquet(staged_rw)
-    staged = path + ".staging"
-    shutil.rmtree(staged, ignore_errors=True)
-    os.makedirs(staged)
-    try:
-        for f in untouched:
-            os.link(f, os.path.join(staged, os.path.basename(f)))
-        for f in _part_files(staged_rw):
-            os.rename(f, os.path.join(staged, "d-" + os.path.basename(f)))
-    finally:
-        shutil.rmtree(staged_rw, ignore_errors=True)
-    _atomic_swap(staged, path)
+        _rewrite_table(survivors, path, untouched)
     return {
         "path": path,
-        "mode": "delete",
+        "mode": "delete" if matched else "noop",
         "files_total": len(files),
         "files_rewritten": len(matched),
         "files_kept": len(untouched),

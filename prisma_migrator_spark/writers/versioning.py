@@ -1,8 +1,9 @@
 """Table versioning / time travel over plain parquet directories.
 
-Every mutating writer in this package (``upsert_parquet_cow``,
-``delete_keys_cow``, ``compact_small_files``, ``zorder_write``)
-replaces the table directory atomically — after which yesterday's
+The table writers of this package (``upsert_parquet``,
+``upsert_parquet_cow``, ``delete_keys_cow``, ``merge_into`` and
+``compact_small_files``, all through ``upsert._rewrite_table``)
+replace the table directory atomically — after which yesterday's
 table is gone. This module adds the missing lakehouse pillar on the
 same no-format principles: a SNAPSHOT is a sibling directory of
 hard links to the current data files (zero data copy, zero read — the

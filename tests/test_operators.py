@@ -10,7 +10,7 @@ from prisma_migrator_spark.operators.aggregates import (
     distinct_pair_agg,
     salted_distinct_pair_agg,
 )
-from prisma_migrator_spark.operators.dedup import latest_per_key
+from prisma_migrator_spark.operators.dedup import dedupe_batch, latest_per_key
 
 
 def test_salted_distinct_agg_matches_unsalted(spark, sf_dir):
@@ -36,6 +36,10 @@ def test_latest_per_key_map_fallback(spark):
     out = latest_per_key(df, ["k"], "ts")
     got = {r.k: (r.ts, dict(r.m)) for r in out.collect()}
     assert got == {1: (2, {"b": 2}), 2: (5, {"c": 3})}
+    # dedupe_batch keeps the smallest row by the orderable columns and
+    # carries the map along (min(struct) over a map fails analysis)
+    got = {r.k: (r.ts, dict(r.m)) for r in dedupe_batch(df, ["k"]).collect()}
+    assert got == {1: (1, {"a": 1}), 2: (5, {"c": 3})}
 
 
 def test_flagship_plan_quality_regression(spark, sf_dir):

@@ -415,6 +415,72 @@ def test_delete_keys_cow_composite_key(spark, tmp_path):
     assert len(got) == 39
 
 
+def _keyed_write(spark, writer, batch, path):
+    from prisma_migrator_spark.writers.merge import merge_into
+    from prisma_migrator_spark.writers.upsert import (
+        upsert_parquet_cow,
+        upsert_partitioned,
+    )
+
+    if writer == "upsert_parquet":
+        upsert_parquet(spark, batch, path, ["k"])
+    elif writer == "upsert_parquet_cow":
+        upsert_parquet_cow(spark, batch, path, ["k"])
+    elif writer == "upsert_partitioned":
+        upsert_partitioned(spark, batch, path, ["k"], "pt")
+    else:
+        merge_into(spark, path, batch, ["k"])
+
+
+KEYED_WRITERS = [
+    "upsert_parquet", "upsert_parquet_cow", "upsert_partitioned", "merge_into",
+]
+
+
+def _seed_table(spark, writer, path):
+    base = _df(spark, [{"k": 9, "v": "z", "pt": "d1"}]).write
+    if writer == "upsert_partitioned":
+        base = base.partitionBy("pt")
+    base.parquet(path)
+
+
+@pytest.mark.parametrize("writer", KEYED_WRITERS)
+def test_duplicate_key_batch_order_independent(spark, tmp_path, writer):
+    """A batch repeating a key gives the same table in either row
+    order: the survivor is chosen by the plan (the smallest row,
+    ``dedupe_batch``), not by which duplicate arrives first."""
+    rows = [{"k": 1, "v": "a", "pt": "d1"}, {"k": 1, "v": "b", "pt": "d1"}]
+    tables = []
+    for i, order in enumerate((rows, rows[::-1])):
+        path = str(tmp_path / f"t{i}.parquet")
+        _seed_table(spark, writer, path)
+        _keyed_write(spark, writer, _df(spark, order), path)
+        tables.append(
+            sorted(map(tuple, spark.read.parquet(path).select("k", "v").collect()))
+        )
+    assert tables[0] == tables[1] == [(1, "a"), (9, "z")]
+
+
+@pytest.mark.parametrize("writer", ["upsert_parquet", "upsert_parquet_cow", "merge_into"])
+def test_failed_rewrite_leaves_table_untouched(spark, tmp_path, writer):
+    """A result write that raises mid-job leaves every data file of the
+    table byte-identical and no staging directory behind: the table
+    changes only by the swap after a complete staged write."""
+    path = str(tmp_path / "t.parquet")
+    _cow_table(spark, path, n=40, n_files=2)
+    before = _file_bytes(path)
+
+    @F.udf("string")
+    def boom(v):
+        raise RuntimeError("boom")
+
+    batch = _df(spark, [{"k": 3, "v": "x", "ts": 1}]).withColumn("v", boom("v"))
+    with pytest.raises(Exception, match="boom"):
+        _keyed_write(spark, writer, batch, path)
+    assert _file_bytes(path) == before
+    assert os.listdir(tmp_path) == ["t.parquet"]
+
+
 def test_bucketed_join_is_shuffle_free(spark, sf_dir):
     from prisma_migrator_spark.catalog import load_table
     from prisma_migrator_spark.writers.bucketed import write_bucketed
